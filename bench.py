@@ -163,7 +163,10 @@ def _steal_suspects(
         # Fall back to the real core count, not a literal: with the
         # env unset on a smaller box a 32-cpu denominator overstates
         # available ticks (e.g. 4x on 8 cpus) and under-flags storms
-        # (ADVICE r10).  Matches session.py's local[N] sizing.
+        # (ADVICE r10).  session.py's local[N] falls back to the
+        # literal 32 instead, so without SPARK_GRAFT_CPUS the two
+        # differ on any box without exactly 32 cores; the physical
+        # core count is the right steal-tick denominator either way.
         cpus = int(
             os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 32)
         )

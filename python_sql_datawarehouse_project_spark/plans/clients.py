@@ -16,10 +16,12 @@ as RunLog's JSONL (runlog.py docstring) — a Spark job per registry
 update would be the tail wagging the dog.
 
 Scale note: the loop is driver-side sequencing only; all heavy lifting
-inside `process_client` is the same Spark plans as single-client mode.
-Clients are independent, so a deployment that needs overlap can run
-them as separate Spark applications against the same root — the
-per-client sub-roots make that safe without coordination.
+inside `process_client` is the same Spark plans as single-client mode
+(its source directories, files and stage procs run concurrently —
+see plans/ingest.py and plans/pipeline.py).  Clients are independent,
+so a deployment that needs overlap can run them as separate Spark
+applications against the same root — the per-client sub-roots make
+that safe without coordination.
 """
 
 from __future__ import annotations
@@ -27,12 +29,13 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import asdict, dataclass, field
+from functools import partial
 
 from pyspark.sql import SparkSession
 
 from .ingest import FileResult, IngestPlan, ingest_directory
-from .pipeline import next_batch_id, run_batch
-from .runlog import RunLog
+from .pipeline import concurrently, next_batch_id, run_batch
+from .runlog import RowBuffer, RunLog
 from .warehouse import Warehouse
 
 
@@ -167,14 +170,24 @@ def process_client(
     log = registry.runlog(client_schema)
     ingested: list[FileResult] = []
     if sources is not None and mode != "reprocessing":
-        for source_system, incoming_dir in sorted(sources.incoming.items()):
-            if os.path.isdir(incoming_dir):
-                ingested.extend(
-                    ingest_directory(
-                        spark, wh, log, sources.plan,
-                        incoming_dir, source_system, batch_id,
-                    )
-                )
+        # source systems land concurrently, so no two of them may be
+        # configured onto one bronze table (the reference names targets
+        # <system>_<table>); each directory logs into its own buffer,
+        # replayed in source-system order
+        dirs = [
+            (system, d) for system, d in sorted(sources.incoming.items())
+            if os.path.isdir(d)
+        ]
+        buffers = [RowBuffer() for _ in dirs]
+        calls = [
+            partial(ingest_directory, spark, wh, buf, sources.plan, d, system, batch_id)
+            for (system, d), buf in zip(dirs, buffers)
+        ]
+        try:
+            ingested = [r for landed in concurrently(spark, calls) for r in landed]
+        finally:
+            for buf in buffers:
+                buf.replay(log)
     # mv_mode="incremental" is the scale path (plans/pipeline.run_mvs);
     # the previous-state snapshot resolves from the state layer's own
     # partition listing, so restart/reprocessing replays stay

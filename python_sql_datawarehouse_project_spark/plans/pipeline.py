@@ -12,11 +12,45 @@ Lifecycle per batch:
                  for the six maintainable MVs, history recompute for
                  the three order-dependent ones)
 
+What runs concurrently.  In the reference each proc runs on its own
+autocommit connection and writes its own table, and within a stage no
+proc reads another's output.  So each stage hands all of its procs
+to `concurrently` at once: the six silver transforms, then the gold
+dims, then the gold facts, then the nine MVs.  Spark's scheduler
+interleaves their jobs, which keeps cores busy that one small
+single-task job at a time leaves idle.
+
+Barriers.  `concurrently` returns only when every call has finished,
+so each stage ends before the next starts: silver -> gold dims ->
+dependency gate -> gold facts -> MVs, as in the reference's three
+drivers.  Ingest (plans/ingest.py) finishes before silver starts.
+
+Run-log order.  Procs return their results instead of logging; the
+driver thread appends the rows once the stage has returned, in
+registry order (TRANSFORMS order, dims before facts, MVS order), so
+the log reads exactly as a one-proc-at-a-time run.
+
+Contract for stage callables.  They run on worker threads that share
+one SparkSession, so they must not change session conf or any other
+session-wide state; a conf set by one proc would leak into the jobs
+of its siblings.  (The scoped confs of the streaming drains and of
+catalog.load_table are outside these stages.)  Spark local
+properties are per thread: each call starts with a copy of the
+calling thread's job group and description.
+
 Batch IDs follow the reference's "BATCH" + 6-digit counter
 (batch_processing.py:49-56).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+from typing import TypeVar
+
+from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 from .gold import DEPENDENCIES, INTEGRATIONS
 from .mv import MVS, refresh_mv
@@ -25,6 +59,8 @@ from .runlog import RunLog
 from .silver import TRANSFORMS
 from .warehouse import Warehouse
 
+T = TypeVar("T")
+
 
 def next_batch_id(last: str | None) -> str:
     """BATCH###### counter (reference batch_processing.py:49-56)."""
@@ -32,52 +68,84 @@ def next_batch_id(last: str | None) -> str:
     return f"BATCH{n + 1:06d}"
 
 
-def run_silver(wh: Warehouse, log: RunLog, batch_id: str) -> dict[str, tuple]:
-    results = {}
-    for name, fn in TRANSFORMS.items():
-        ok, err, n = fn(wh, batch_id)
-        results[name] = (ok, err, n)
+def concurrently(spark: SparkSession, calls: Sequence[Callable[[], T]]) -> list[T]:
+    """Run each zero-argument call on its own driver thread and return
+    their results in call order.
+
+    Each call is wrapped with `inheritable_thread_target(spark)`, so
+    the Spark jobs it submits carry the caller's local properties (job
+    group, description) and session tags.  Every call gets its own copy
+    of those properties, so a call that sets its own job group leaves
+    its siblings' alone.  Returns only after every call has finished;
+    if any call raised, the first exception in call order is re-raised
+    then."""
+    with ThreadPoolExecutor(max_workers=max(1, len(calls))) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(c)) for c in calls]
+    return [f.result() for f in futures]
+
+
+def _run_procs(
+    wh: Warehouse, procs: dict[str, Callable], batch_id: str
+) -> dict[str, tuple]:
+    """Run (wh, batch_id) -> (ok, err, rows) procs concurrently."""
+    calls = [partial(fn, wh, batch_id) for fn in procs.values()]
+    return dict(zip(procs, concurrently(wh.spark, calls)))
+
+
+def _log_results(
+    log: RunLog,
+    table: str,
+    batch_id: str,
+    results: dict[str, tuple],
+    mode: str | None = None,
+) -> None:
+    """One status row per proc, in `results` order; with `mode`, a
+    successful row's message names it (mv_refresh_log)."""
+    for name, (ok, err, n) in results.items():
         log.append(
-            "transformation_log",
+            table,
             proc_name=name,
             batch_id=batch_id,
             status="SUCCESS" if ok else "FAILED",
             record_count=n,
-            message=err,
+            message=(err or f"mode={mode}") if mode else err,
         )
+
+
+def run_silver(wh: Warehouse, log: RunLog, batch_id: str) -> dict[str, tuple]:
+    results = _run_procs(wh, TRANSFORMS, batch_id)
+    _log_results(log, "transformation_log", batch_id, results)
     return results
 
 
 def run_gold(wh: Warehouse, log: RunLog, batch_id: str) -> dict[str, tuple]:
-    """Dims before facts; facts skipped unless all deps SUCCESS."""
-    results = {}
-    ordered = sorted(
-        INTEGRATIONS, key=lambda k: (k in DEPENDENCIES, k)
-    )  # no-dep (dims) first, then dependent (facts)
-    for name in ordered:
-        deps = DEPENDENCIES.get(name, ())
-        done = log.successes("integration_log", batch_id)
-        missing = [d for d in deps if d not in done]
-        if missing:
-            results[name] = (False, f"SKIPPED: deps not satisfied {missing}", 0)
-            log.append(
-                "integration_log",
-                proc_name=name,
-                batch_id=batch_id,
-                status="SKIPPED",
-                record_count=0,
-                message=f"dependencies not satisfied: {missing}",
-            )
+    """Dims before facts; facts skipped unless all deps SUCCESS.
+
+    The dims (no dependencies) run together and are logged; then the
+    dependency gate reads the log once and the facts whose dims all
+    succeeded run together.  A fact depends only on dims."""
+    dims = sorted(k for k in INTEGRATIONS if k not in DEPENDENCIES)
+    facts = sorted(DEPENDENCIES)
+    results = _run_procs(wh, {k: INTEGRATIONS[k] for k in dims}, batch_id)
+    _log_results(log, "integration_log", batch_id, results)
+    done = log.successes("integration_log", batch_id)
+    missing = {k: [d for d in DEPENDENCIES[k] if d not in done] for k in facts}
+    ran = _run_procs(
+        wh, {k: INTEGRATIONS[k] for k in facts if not missing[k]}, batch_id
+    )
+    for name in facts:
+        if name in ran:
+            results[name] = ran[name]
+            _log_results(log, "integration_log", batch_id, {name: ran[name]})
             continue
-        ok, err, n = INTEGRATIONS[name](wh, batch_id)
-        results[name] = (ok, err, n)
+        results[name] = (False, f"SKIPPED: deps not satisfied {missing[name]}", 0)
         log.append(
             "integration_log",
             proc_name=name,
             batch_id=batch_id,
-            status="SUCCESS" if ok else "FAILED",
-            record_count=n,
-            message=err,
+            status="SKIPPED",
+            record_count=0,
+            message=f"dependencies not satisfied: {missing[name]}",
         )
     return results
 
@@ -89,7 +157,8 @@ def run_mvs(
     mode: str = "full",
     prev_batch_id: str | None = None,
 ) -> dict[str, tuple]:
-    """Refresh all nine MVs for `batch_id`.
+    """Refresh all nine MVs for `batch_id`, all at once (see the module
+    docstring); rows land in mv_refresh_log in MVS order.
 
     mode="full" (default, reference-faithful: refresh_mode='FULL' at
     materialized_view.sql:161-169) recomputes each MV over the batch.
@@ -128,8 +197,8 @@ def run_mvs(
     from .mv_incremental import APPROX, refresh_mv_incremental_approx
 
     incremental = mode in ("incremental", "incremental_approx")
-    results = {}
-    for name in MVS:
+
+    def refresh(name: str) -> tuple:
         if incremental and name in INCREMENTAL:
             try:
                 if mode == "incremental_approx" and name in APPROX:
@@ -140,22 +209,13 @@ def run_mvs(
                     _, n = refresh_mv_incremental(
                         wh, name, batch_id, prev_batch_id=prev_batch_id
                     )
-                ok, err = True, None
+                return True, None, n
             except Exception as e:  # logged like the FULL path's failures
-                ok, err, n = False, str(e), 0
-        elif incremental:
-            ok, err, n = refresh_mv(wh, name, batch_id, history=True)
-        else:
-            ok, err, n = refresh_mv(wh, name, batch_id)
-        results[name] = (ok, err, n)
-        log.append(
-            "mv_refresh_log",
-            proc_name=name,
-            batch_id=batch_id,
-            status="SUCCESS" if ok else "FAILED",
-            record_count=n,
-            message=err if err else f"mode={mode}",
-        )
+                return False, str(e), 0
+        return refresh_mv(wh, name, batch_id, history=incremental)
+
+    results = dict(zip(MVS, concurrently(wh.spark, [partial(refresh, n) for n in MVS])))
+    _log_results(log, "mv_refresh_log", batch_id, results, mode=mode)
     return results
 
 

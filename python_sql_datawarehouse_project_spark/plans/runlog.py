@@ -28,6 +28,31 @@ LOG_TABLES = (
 )
 
 
+def now() -> str:
+    """A run-log row's ``logged_at`` stamp (UTC, ISO 8601)."""
+    return _dt.datetime.now(_dt.timezone.utc).isoformat()
+
+
+class RowBuffer:
+    """Run-log rows held in memory, with RunLog's ``append`` signature.
+
+    Procs that run concurrently write into one buffer each; the
+    driver thread then replays the buffers into the RunLog in a fixed
+    order, so the log's row order does not depend on which proc
+    finished first.  Each row keeps the ``logged_at`` of the event."""
+
+    def __init__(self):
+        self.rows: list[tuple[str, dict]] = []
+
+    def append(self, table: str, **row) -> None:
+        row.setdefault("logged_at", now())
+        self.rows.append((table, row))
+
+    def replay(self, log) -> None:
+        for table, row in self.rows:
+            log.append(table, **row)
+
+
 class RunLog:
     def __init__(self, root: str):
         self.root = os.path.join(root, "tools")
@@ -39,7 +64,7 @@ class RunLog:
         return os.path.join(self.root, f"{table}.jsonl")
 
     def append(self, table: str, **row) -> None:
-        row.setdefault("logged_at", _dt.datetime.now(_dt.timezone.utc).isoformat())
+        row.setdefault("logged_at", now())
         with open(self._path(table), "a") as f:
             f.write(json.dumps(row, default=str) + "\n")
 

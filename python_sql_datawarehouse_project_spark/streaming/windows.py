@@ -34,6 +34,7 @@ from __future__ import annotations
 import contextlib
 import os
 import shutil
+import stat
 import tempfile
 import uuid
 
@@ -84,13 +85,19 @@ _STATE_PART_BYTES = 4 << 20
 
 
 def _source_bytes(src: str) -> int:
+    """Size of a stream source: a single file's bytes, or the sum over
+    every regular file in a directory tree (a partitioned layout keeps
+    its data files in subdirectories; the directory entries themselves
+    are not data)."""
     try:
-        if os.path.isdir(src):
-            return sum(
-                os.path.getsize(os.path.join(src, f))
-                for f in os.listdir(src)
-            )
-        return os.path.getsize(src)
+        if not os.path.isdir(src):
+            return os.path.getsize(src)
+        return sum(
+            st.st_size
+            for root, _, names in os.walk(src)
+            for st in (os.lstat(os.path.join(root, n)) for n in names)
+            if stat.S_ISREG(st.st_mode)
+        )
     except OSError:
         return 0
 

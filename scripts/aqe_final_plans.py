@@ -3,11 +3,11 @@ self-join gates whose exchange-reuse rationale VERDICT r10 #2 flagged
 as asserted-not-shown: dd2, dd3, dd17, rj2.
 
 Static `.explain()` shows `AdaptiveSparkPlan isFinalPlan=false` and can
-never contain `ReusedExchange` nodes injected by AQE at runtime.  This
-script executes each gate with the noop sink is NOT enough either —
-the write wraps its own QueryExecution — so it runs `collect()` on the
-gate's own DataFrame (same plan, small results at these SFs) and then
-prints the now-final adaptive plan.
+never contain `ReusedExchange` nodes injected by AQE at runtime.
+Executing each gate with the noop sink is not enough either — the
+write wraps its own QueryExecution — so this script runs `collect()`
+on the gate's own DataFrame (same plan, small results at these SFs)
+and then prints the now-final adaptive plan.
 
 Usage: python scripts/aqe_final_plans.py [sf_dir] [gate ...]
 Writes plans/r11/<gate>_aqe_final.txt

@@ -154,6 +154,9 @@ def test_ingest_directory_end_to_end(spark, tmp_path, csv_file):
     incoming.mkdir()
     os.link(csv_file, incoming / os.path.basename(csv_file))
     (incoming / "mystery_file.csv").write_text("a,b\n1,2\n")
+    # matches the cust_info config but lacks mapped columns; it sorts
+    # first and shares the LOADED file's bronze table
+    (incoming / "cust_info_0_extra.csv").write_text("cst_id,bogus\n1,2\n")
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
     log = RunLog(str(tmp_path / "wh"))
@@ -165,6 +168,20 @@ def test_ingest_directory_end_to_end(spark, tmp_path, csv_file):
     results = ingest_directory(
         spark, wh, log, plan, str(incoming), "crm", "BATCH000007"
     )
+    # results and log rows come out in sorted file-name order
+    assert [(r.file, r.status) for r in results] == [
+        ("cust_info_0_extra.csv", "MAPPING_FAILED"),
+        ("cust_info_BATCH000001.csv", "LOADED"),
+        ("mystery_file.csv", "CONFIG_FAILED"),
+    ]
+    assert [r["physical_file_name"] for r in log.read("file_audit_log")] == [
+        "cust_info_BATCH000001.csv",
+        "mystery_file.csv",
+    ]
+    assert [
+        (r["physical_file_name"], r["status"])
+        for r in log.read("mapping_validation_log")
+    ] == [("cust_info_0_extra.csv", "FAILED"), ("cust_info_BATCH000001.csv", "SUCCESS")]
     by_file = {r.file: r for r in results}
     assert by_file["mystery_file.csv"].status == "CONFIG_FAILED"
     loaded = by_file["cust_info_BATCH000001.csv"]

@@ -530,3 +530,34 @@ def test_state_partitions_scale_with_source_size(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
     assert sw._state_partitions(str(big)) == 8
     assert sw._state_partitions(None) == 4  # no source: the floor
+
+
+def test_source_bytes_walks_a_partitioned_layout(tmp_path, monkeypatch):
+    # a partitioned source keeps its data files one or more directories
+    # down; sizing must sum those files, not the directory entries
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+
+    def sparse(path, size: int) -> None:
+        path.parent.mkdir(parents=True, exist_ok=True)
+        with open(path, "wb") as f:
+            f.truncate(size)
+
+    src = tmp_path / "events"
+    sizes = {
+        "date=2024-01-01/part-0.parquet": 20 << 20,
+        "date=2024-01-01/part-1.parquet": 20 << 20,
+        "date=2024-01-02/region=EU/part-0.parquet": 40 << 20,
+        "_SUCCESS": 0,
+    }
+    for rel, size in sizes.items():
+        sparse(src / rel, size)
+    (src / "link.parquet").symlink_to(src / "date=2024-01-01" / "part-0.parquet")
+    assert sw._source_bytes(str(src)) == 80 << 20  # the symlink is not counted
+    assert sw._state_partitions(str(src)) == 20
+
+    # a single-file source keeps its own size, and so its partition count
+    single = tmp_path / "events.parquet"
+    sparse(single, 112 << 20)
+    assert sw._source_bytes(str(single)) == 112 << 20
+    assert sw._state_partitions(str(single)) == 28
+    assert sw._source_bytes(str(tmp_path / "missing")) == 0
